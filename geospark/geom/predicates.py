@@ -2,10 +2,16 @@
 
 Semantics follow the reference (core.clj:266-275 intersects?/touches?/
 covers?/overlaps?/contains?/distance, index.clj:124-160 refine modes).
-The hot path is `PreparedPolygon.contains_batch`: one polygon prepared
-once per partition, tested against a whole numpy batch of points —
-this is the Spark-side analogue of the reference preparing the query
-geometry once per R-tree probe (index.clj:135).
+
+Two point-location kernels share one set of expressions:
+
+- `PreparedPolygon.locate_batch`: one polygon, a numpy batch of
+  points — the Spark-side analogue of the reference preparing the
+  query geometry once per R-tree probe (index.clj:135).
+- `locate_pairs`: the spatial-join hot path.  Many (polygon, point)
+  candidate pairs in one numpy pass over a flat, y-banded edge table
+  (`edge_table`) built once per polygon layer, so a join kernel pays
+  no per-polygon Python work.  Codes are bit-identical to `locate_batch`.
 """
 
 from __future__ import annotations
@@ -166,6 +172,136 @@ class PreparedPolygon:
 
     def contains_strict_batch(self, px, py) -> np.ndarray:
         return self.locate_batch(px, py) == INTERIOR
+
+
+# ---------------------------------------------------------------------------
+# many polygons: flat y-banded edge table + pair kernel
+# ---------------------------------------------------------------------------
+
+# pair-edge elements per chunk.  Far below _locate_many's 4M bound on
+# purpose: at 64k each float64 temporary is 0.5 MB and stays in cache.
+# Measured on 4 cores, one flagship task's 288k pair-edges and
+# 20,000-edge polygons × 5,000 points: 1.5-2.8x faster than 4M chunks.
+PAIR_CHUNK = 1 << 16
+
+
+def _band_of(y, ymin, h, nb):
+    """y-band of each value, clamped to [0, nb) in float before the
+    int cast (an overflowing quotient cannot wrap)."""
+    return np.clip(np.floor((y - ymin) / h), 0, nb - 1).astype(np.int64)
+
+
+def edge_table(geoms) -> dict:
+    """Flat edge table of many polygons for `locate_pairs`.
+
+    Every polygon gets PreparedPolygon's y-band index — int(sqrt(E))+1
+    bands of height (ymax - ymin) / nb (1.0 when that is 0) — for any
+    edge count, stored as CSR: polygon → its bands (`band_off`) → edge
+    ids (`band_start`, `band_edges`).  An edge is listed in every band
+    its y-extent touches, so a point's band holds every edge that can
+    put the point on the boundary or cross its ray."""
+    preps = [PreparedPolygon(g) for g in geoms]
+    n = len(preps)
+    n_edges = np.asarray([len(p.x1) for p in preps], dtype=np.int64)
+    bbox = np.asarray([p.bbox for p in preps], dtype=np.float64).reshape(n, 4)
+    nb = np.asarray([int(math.sqrt(e)) + 1 for e in n_edges], dtype=np.int64)
+    h = np.asarray(
+        [((b[3] - b[1]) / k or 1.0) if e else 1.0 for b, k, e in zip(bbox, nb, n_edges)],
+        dtype=np.float64,
+    )
+    band_off = np.concatenate([[0], np.cumsum(nb)])
+
+    def cat(name):
+        arrs = [getattr(p, name) for p in preps]
+        return np.concatenate(arrs).astype(np.float64) if arrs else np.empty(0)
+
+    x1, y1, x2, y2 = cat("x1"), cat("y1"), cat("x2"), cat("y2")
+    owner = np.repeat(np.arange(n, dtype=np.int64), n_edges)
+    lo = _band_of(np.minimum(y1, y2), bbox[owner, 1], h[owner], nb[owner])
+    hi = _band_of(np.maximum(y1, y2), bbox[owner, 1], h[owner], nb[owner])
+    # (edge, band) expansion; edges are already in polygon order, so a
+    # stable sort on the global band id keeps edge order within a band
+    span = hi - lo + 1
+    edge = np.repeat(np.arange(len(x1), dtype=np.int64), span)
+    gband = np.repeat(band_off[owner] + lo - (np.cumsum(span) - span), span) + np.arange(
+        len(edge), dtype=np.int64
+    )
+    order = np.argsort(gband, kind="stable")
+    band_start = np.concatenate(
+        [[0], np.cumsum(np.bincount(gband, minlength=int(band_off[-1])))]
+    )
+    return {
+        "x1": x1, "y1": y1, "x2": x2, "y2": y2,
+        "bbox": bbox,
+        "nb": nb,
+        "h": h,
+        "band_off": band_off,
+        "band_start": band_start,
+        "band_edges": edge[order],
+    }
+
+
+def locate_pairs(table: dict, poly: np.ndarray, px: np.ndarray, py: np.ndarray) -> np.ndarray:
+    """0=exterior 1=boundary 2=interior of point (px[i], py[i]) in
+    polygon poly[i] of `table` (see edge_table), for every pair i.
+
+    One numpy pass over all pairs: the same inclusive bbox prefilter,
+    on-segment test and half-open crossing number as
+    PreparedPolygon.locate_batch, but each pair meets only the edges of
+    its point's y-band.  No other edge can touch the point or cross its
+    ray, so the codes equal locate_batch's exactly."""
+    out = np.zeros(len(poly), dtype=np.int8)
+    bx = table["bbox"][poly]
+    inside = (px >= bx[:, 0]) & (px <= bx[:, 2]) & (py >= bx[:, 1]) & (py <= bx[:, 3])
+    idx = np.flatnonzero(inside)
+    if len(idx) == 0:
+        return out
+    ip = poly[idx]
+    band = table["band_off"][ip] + _band_of(py[idx], bx[idx, 1], table["h"][ip], table["nb"][ip])
+    bstart = table["band_start"]
+    first = bstart[band]
+    cnt = bstart[band + 1] - first
+    cum = np.cumsum(cnt)
+    s = 0
+    while s < len(idx):
+        base = cum[s - 1] if s else 0
+        e = max(int(np.searchsorted(cum, base + PAIR_CHUNK, side="right")), s + 1)
+        out[idx[s:e]] = _locate_pair_chunk(
+            table, px[idx[s:e]], py[idx[s:e]], first[s:e], cnt[s:e]
+        )
+        s = e
+    return out
+
+
+def _locate_pair_chunk(table, px, py, first, cnt) -> np.ndarray:
+    n = len(px)
+    ends = np.cumsum(cnt)
+    eid = table["band_edges"][
+        np.repeat(first - (ends - cnt), cnt) + np.arange(int(ends[-1]), dtype=np.int64)
+    ]
+    x1, y1 = table["x1"][eid], table["y1"][eid]
+    x2, y2 = table["x2"][eid], table["y2"][eid]
+    PX, PY = np.repeat(px, cnt), np.repeat(py, cnt)
+    pair = np.repeat(np.arange(n, dtype=np.int64), cnt)
+    # boundary: point on segment (collinear first, then within the
+    # segment's bbox, checked on the few collinear entries only)
+    c = np.flatnonzero((x2 - x1) * (PY - y1) - (y2 - y1) * (PX - x1) == 0)
+    X1, Y1, X2, Y2, cx, cy = x1[c], y1[c], x2[c], y2[c], PX[c], PY[c]
+    on = c[
+        (cx >= np.minimum(X1, X2))
+        & (cx <= np.maximum(X1, X2))
+        & (cy >= np.minimum(Y1, Y2))
+        & (cy <= np.maximum(Y1, Y2))
+    ]
+    # crossing number (half-open rule avoids double counting vertices):
+    # the edge straddles the ray's y when exactly one end is at or below
+    c = np.flatnonzero((y1 <= PY) != (y2 <= PY))
+    X1, Y1, X2, Y2, cy = x1[c], y1[c], x2[c], y2[c], PY[c]
+    xint = X1 + (cy - Y1) * (X2 - X1) / (Y2 - Y1)
+    crossings = np.bincount(pair[c[PX[c] < xint]], minlength=n)
+    res = np.where(crossings % 2 == 1, INTERIOR, EXTERIOR).astype(np.int8)
+    res[pair[on]] = BOUNDARY
+    return res
 
 
 def _poly_rings(g: Geometry):

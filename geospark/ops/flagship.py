@@ -6,10 +6,19 @@ JVM↔Python Arrow round-trip *and* one python worker per task — at
 local[32] a 3-stage chain runs ~96 worker processes on 32 cores and
 scaling efficiency collapses (measured 0.38 from 8→32 cores).  The
 broadcast PIP join needs no Catalyst join at all: the build side is a
-cell→polygons hash index shipped once per executor (the distributed
-form of the reference's prepared-geometry probe, index.clj:124-139),
-so the whole pipeline is scan → one mapInPandas → aggregate: perfectly
-data-parallel, zero shuffles before the final count/sink.
+cell→polygons hash index plus the polygons' flat y-banded edge table,
+shipped once per executor (the distributed form of the reference's
+prepared-geometry probe, index.clj:124-139), so the whole pipeline is
+scan → one mapInArrow → aggregate: perfectly data-parallel, zero
+shuffles before the final count/sink.
+
+Inside the Python stage the kernel (`_pip_tile`) is batch-at-a-time,
+never polygon-at-a-time: every (polygon, point) candidate pair of a
+batch is gathered from the cell index and located in ONE numpy pass
+(`predicates.locate_pairs`).  Measured on 4 cores, one task's 100,587
+pairs over ~1,200 districts: the former per-polygon loop (decode,
+prepare, `locate_batch`) took ~165 ms; the whole kernel now takes
+~45 ms, of which the pair pass is ~20 ms.
 """
 
 from __future__ import annotations
@@ -155,22 +164,22 @@ def _out_schema(polys: DataFrame, poly_id: str, include_url: bool) -> StructType
 def build_cell_index(polys_rows, grid: CellGrid, level: int):
     """cell id → int32 indexes into the polygon arrays, in CSR layout
     (sorted keys + member slices) so the probe resolves every cell of
-    a batch with ONE np.searchsorted (driver-side; result is
-    broadcast)."""
+    a batch with ONE np.searchsorted, plus the polygons' flat y-banded
+    edge table for the pair kernel (built once, then broadcast)."""
     pids = []
-    wkbs = []
+    geoms = []
     cell_map = defaultdict(list)
     for i, (pid, wkb) in enumerate(polys_rows):
         g = gc.from_wkb(wkb)
         for cid in cover_geometry(g, grid, level):
             cell_map[int(cid)].append(i)
         pids.append(pid)
-        wkbs.append(wkb)
+        geoms.append(g)
     sorted_cells = sorted(cell_map)
     counts = np.asarray([len(cell_map[c]) for c in sorted_cells], dtype=np.int64)
     return {
         "pids": np.asarray(pids),
-        "wkbs": wkbs,
+        "edges": gpred.edge_table(geoms),
         "cell_keys": np.asarray(sorted_cells, dtype=np.int64),
         "starts": np.concatenate([[0], np.cumsum(counts)]),
         "members": (
@@ -184,11 +193,11 @@ def build_cell_index(polys_rows, grid: CellGrid, level: int):
     }
 
 
-def _gather_poly_points(pcells, keys, starts, members):
+def _gather_pairs(pcells, keys, starts, members):
     """Vectorized candidate gather: for every point whose cell hits the
     index, pair it with each member polygon of that cell.  Returns
-    (poly_sorted, point_sorted, slice_bounds): candidate pairs grouped
-    into contiguous per-polygon slices — no python loop over cells."""
+    (poly_idx, point_idx), one entry per candidate pair — no python
+    loop over cells or polygons."""
     order = np.argsort(pcells, kind="stable")
     pcells_s = pcells[order]
     bnds = np.flatnonzero(np.r_[True, pcells_s[1:] != pcells_s[:-1], True])
@@ -216,16 +225,29 @@ def _gather_poly_points(pcells, keys, starts, members):
     T = int(pair_pts.sum())
     qrow = np.repeat(np.arange(P, dtype=np.int64), pair_pts)
     qoff = np.arange(T, dtype=np.int64) - np.repeat(np.cumsum(pair_pts) - pair_pts, pair_pts)
-    point_idx = order[vstart[prow][qrow] + qoff]
-    poly_idx = pair_poly[qrow]
-    # group candidate pairs by polygon into contiguous slices
-    gorder = np.argsort(poly_idx, kind="stable")
-    poly_sorted = poly_idx[gorder]
-    point_sorted = point_idx[gorder]
-    slice_bounds = np.flatnonzero(
-        np.r_[True, poly_sorted[1:] != poly_sorted[:-1], True]
-    )
-    return poly_sorted, point_sorted, slice_bounds
+    return pair_poly[qrow], order[vstart[prow][qrow] + qoff]
+
+
+def _pip_tile(idx, grid: CellGrid, tile_level: int, ids, px, py, urls):
+    """The flagship kernel over one batch of geocoded points: gather
+    candidate pairs → one pair pass → one tile encode over all hits.
+    Returns the output columns (page_id[, url], poly_id, cell_id), or
+    None when no point lands in a polygon."""
+    pcells = grid.encode_points(px, py, idx["level"])
+    gathered = _gather_pairs(pcells, idx["cell_keys"], idx["starts"], idx["members"])
+    if gathered is None:
+        return None
+    poly, point = gathered
+    hit = gpred.locate_pairs(idx["edges"], poly, px[point], py[point]) != gpred.EXTERIOR
+    if not hit.any():
+        return None
+    poly, point = poly[hit], point[hit]
+    cols = {"page_id": ids[point]}
+    if urls is not None:
+        cols["url"] = urls[point]
+    cols["poly_id"] = idx["pids"][poly]
+    cols["cell_id"] = grid.encode_points(px[point], py[point], tile_level)
+    return cols
 
 
 def geocode_pip_tile(
@@ -278,11 +300,6 @@ def geocode_pip_tile(
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         idx = bc.value
-        keys, starts, members = idx["cell_keys"], idx["starts"], idx["members"]
-        wkbs = idx["wkbs"]
-        pids = idx["pids"]
-        lvl = idx["level"]
-        prepared: dict = {}
         geo_re = re.compile(GEO_RE.encode())
         for pdf in batches:
             # match on raw html bytes: one pass, no decode/strip copies
@@ -298,38 +315,12 @@ def geocode_pip_tile(
             ok = ~np.isnan(x)
             if not ok.any():
                 continue
-            px, py = x[ok], y[ok]
-            urls = pdf["url"].to_numpy()[ok] if include_url else None
-            ids = pdf["page_id"].to_numpy()[ok]
-            pcells = grid.encode_points(px, py, lvl)
-            gathered = _gather_poly_points(pcells, keys, starts, members)
-            if gathered is None:
-                continue
-            poly_sorted, point_sorted, sb = gathered
-            out_pid, out_url, out_poly, out_cell = [], [], [], []
-            for s, e in zip(sb[:-1], sb[1:]):
-                pi = int(poly_sorted[s])
-                sel = point_sorted[s:e]
-                pp = prepared.get(pi)
-                if pp is None:
-                    if len(prepared) > 4096:
-                        prepared.clear()
-                    pp = gpred.PreparedPolygon(gc.from_wkb(wkbs[pi]))
-                    prepared[pi] = pp
-                loc = pp.locate_batch(px[sel], py[sel])
-                hit = sel[loc != gpred.EXTERIOR]
-                if len(hit):
-                    out_pid.append(ids[hit])
-                    if include_url:
-                        out_url.append(urls[hit])
-                    out_poly.append(np.full(len(hit), pids[pi]))
-                    out_cell.append(grid.encode_points(px[hit], py[hit], tile_level))
-            if out_pid:
-                cols = {"page_id": np.concatenate(out_pid)}
-                if include_url:
-                    cols["url"] = np.concatenate(out_url)
-                cols["poly_id"] = np.concatenate(out_poly)
-                cols["cell_id"] = np.concatenate(out_cell)
+            cols = _pip_tile(
+                idx, grid, tile_level,
+                pdf["page_id"].to_numpy()[ok], x[ok], y[ok],
+                pdf["url"].to_numpy()[ok] if include_url else None,
+            )
+            if cols is not None:
                 yield pd.DataFrame(cols)
 
     in_cols = ["page_id", "url", "html"] if include_url else ["page_id", "html"]
@@ -403,62 +394,30 @@ def geocode_pip_tile_jvm(
 
     out_schema = _out_schema(polys, poly_id, include_url)
 
-    # Kernel I/O shape (round 6, measured at 160M pages): mapInArrow
-    # instead of mapInPandas skips the pandas conversion on both sides
-    # (19.3s → 18.1s), and coalescing input record batches to ~1M rows
-    # before the per-polygon loop amortizes its per-call overhead
-    # (18.1s → 15.6s when measured via maxRecordsPerBatch=1M; the
-    # kernel-side coalesce gets the same effect without raising the
-    # session-wide batch cap, which would quadruple the text kernels'
-    # per-batch memory).
+    # Kernel I/O shape: mapInArrow instead of mapInPandas skips the
+    # pandas conversion on both sides (round 6, 160M pages: 19.3s →
+    # 18.1s).  Input record batches are coalesced to ~1M rows, and each
+    # coalesced batch is one gather, one pair pass over all of its
+    # candidate pairs, one tile encode and one output RecordBatch, so
+    # no Python work scales with the number of polygons hit.  The
+    # coalesce amortizes the per-call fixed costs (round 6, when the
+    # kernel still looped per polygon: 18.1s → 15.6s) without raising
+    # the session-wide batch cap, which would quadruple the text
+    # kernels' per-batch memory.
     target_rows = 1 << 20
 
     def run(rbatches):
         import pyarrow as pa
 
         idx = bc.value
-        keys, starts, members = idx["cell_keys"], idx["starts"], idx["members"]
-        wkbs = idx["wkbs"]
-        pids = idx["pids"]
-        lvl = idx["level"]
-        prepared: dict = {}
 
         def process(ids, px, py, urls):
-            pcells = grid.encode_points(px, py, lvl)
-            gathered = _gather_poly_points(pcells, keys, starts, members)
-            if gathered is None:
+            cols = _pip_tile(idx, grid, tile_level, ids, px, py, urls)
+            if cols is None:
                 return None
-            poly_sorted, point_sorted, sb = gathered
-            out_pid, out_url, out_poly, out_cell = [], [], [], []
-            for s, e in zip(sb[:-1], sb[1:]):
-                pi = int(poly_sorted[s])
-                sel = point_sorted[s:e]
-                pp = prepared.get(pi)
-                if pp is None:
-                    if len(prepared) > 4096:
-                        prepared.clear()
-                    pp = gpred.PreparedPolygon(gc.from_wkb(wkbs[pi]))
-                    prepared[pi] = pp
-                loc = pp.locate_batch(px[sel], py[sel])
-                hit = sel[loc != gpred.EXTERIOR]
-                if len(hit):
-                    out_pid.append(ids[hit])
-                    if include_url:
-                        out_url.append(urls[hit])
-                    out_poly.append(np.full(len(hit), pids[pi]))
-                    out_cell.append(grid.encode_points(px[hit], py[hit], tile_level))
-            if not out_pid:
-                return None
-            arrays = [pa.array(np.concatenate(out_pid))]
-            names = ["page_id"]
-            if include_url:
-                arrays.append(pa.array(np.concatenate(out_url)))
-                names.append("url")
-            arrays.append(pa.array(np.concatenate(out_poly)))
-            names.append("poly_id")
-            arrays.append(pa.array(np.concatenate(out_cell)))
-            names.append("cell_id")
-            return pa.RecordBatch.from_arrays(arrays, names=names)
+            return pa.RecordBatch.from_arrays(
+                [pa.array(v) for v in cols.values()], names=list(cols)
+            )
 
         buf_ids, buf_px, buf_py, buf_urls = [], [], [], []
         nbuf = 0
@@ -584,8 +543,8 @@ def geocode_pip_tile_hybrid(
     hits resolve in the JVM.
 
     Exactness: inner-box hits are strictly interior by construction
-    (_inner_box proof); ring candidates get the identical
-    PreparedPolygon kernel; tile ids use the bit-identical Catalyst
+    (_inner_box proof); ring candidates get the identical pair
+    kernel; tile ids use the bit-identical Catalyst
     Morton encode.  Output equals geocode_pip_tile_jvm row-for-row
     (asserted in tests).
 
@@ -608,13 +567,13 @@ def geocode_pip_tile_hybrid(
     pid_type = polys.schema[poly_id].dataType.simpleString()
 
     cand_rows = []
-    wkbs = []
+    geoms = []
     for i, (pid, wkb) in enumerate(polys_rows):
         g = gc.from_wkb(wkb)
         pp = gpred.PreparedPolygon(g)
         bxmin, bymin, bxmax, bymax = (float(v) for v in pp.bbox)
         ix0, iy0, ix1, iy1 = (float(v) for v in _inner_box(pp))
-        wkbs.append(wkb)
+        geoms.append(g)
         for cid in cover_geometry(g, grid, level):
             cand_rows.append(
                 (int(cid), pid, i, bxmin, bymin, bxmax, bymax, ix0, iy0, ix1, iy1)
@@ -625,7 +584,7 @@ def geocode_pip_tile_hybrid(
         "__bxmin double, __bymin double, __bxmax double, __bymax double, "
         "__ix0 double, __iy0 double, __ix1 double, __iy1 double",
     )
-    bc_wkbs = spark.sparkContext.broadcast(wkbs)
+    bc_edges = spark.sparkContext.broadcast(gpred.edge_table(geoms))
 
     pts = _extract_points_jvm(pages, include_url).withColumn(
         "__cell", cell_id_expr(F.col("x"), F.col("y"), level, grid)
@@ -655,29 +614,16 @@ def geocode_pip_tile_hybrid(
     out_schema = _out_schema(polys, poly_id, include_url)
 
     def refine(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        blobs = bc_wkbs.value
-        prepared: dict = {}
+        edges = bc_edges.value
         for pdf in batches:
             if not len(pdf):
                 continue
-            px_ = pdf["x"].to_numpy(np.float64)
-            py_ = pdf["y"].to_numpy(np.float64)
-            pidx = pdf["__pidx"].to_numpy(np.int64)
-            order = np.argsort(pidx, kind="stable")
-            ps = pidx[order]
-            sb = np.flatnonzero(np.r_[True, ps[1:] != ps[:-1], True])
-            keep = np.zeros(len(pdf), dtype=bool)
-            for s, e in zip(sb[:-1], sb[1:]):
-                pi = int(ps[s])
-                sel = order[s:e]
-                pp = prepared.get(pi)
-                if pp is None:
-                    if len(prepared) > 4096:
-                        prepared.clear()
-                    pp = gpred.PreparedPolygon(gc.from_wkb(blobs[pi]))
-                    prepared[pi] = pp
-                loc = pp.locate_batch(px_[sel], py_[sel])
-                keep[sel[loc != gpred.EXTERIOR]] = True
+            keep = gpred.locate_pairs(
+                edges,
+                pdf["__pidx"].to_numpy(np.int64),
+                pdf["x"].to_numpy(np.float64),
+                pdf["y"].to_numpy(np.float64),
+            ) != gpred.EXTERIOR
             if keep.any():
                 hit = pdf[keep]
                 cols = {"page_id": hit["page_id"].to_numpy()}

@@ -155,15 +155,17 @@ def knn_join(
         )
     # probe cells: the rng-expanded query envelope (⊇ every build
     # envelope within rect distance rng, since cell_size ≥ rng).
-    # Point queries expanded by rng span ≤ 2·rng ≤ 2·cell_size per
-    # axis whenever the level honors cell_size ≥ rng — their cover is
-    # a ≤3×3 grid, emitted by explode_cover3 in JIT-able codegen
+    # Point queries expanded by rng span ≤ 2·rng < 2·cell_size per
+    # axis whenever cell_size > rng — their cover is a ≤3×3 grid,
+    # emitted by explode_cover3 in JIT-able codegen
     # (explode(env_cells_expr) is interpreted per row; same finding
     # as the build side below, and the query side is the BIG side in
     # batch-lookup workloads — measured 32× at 20M query points).
-    # Geometry queries and caller-forced finer levels keep the
-    # general HOF cover.
-    if query_geom is None and grid.cell_size(level) >= rng:
+    # The guard is strict: at cell_size == rng, x - rng and x + rng
+    # round independently and can reach 4 cells per axis.  Geometry
+    # queries, caller-forced finer levels and that exact boundary keep
+    # the general HOF cover.
+    if query_geom is None and grid.cell_size(level) > rng:
         from ..cells.cellexpr import explode_cover3
 
         q = explode_cover3(

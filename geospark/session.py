@@ -30,7 +30,9 @@ def build_session(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.shuffle.partitions", str(shuffle))
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        # measured sweep at 32-way (tools/profile_flagship.py, 16M pages):
+        # measured sweep at 32-way (round 6, flagship at 16M pages; the
+        # flagship's layers are now profiled by
+        # `perfbench/run.py --workload bulk_pip_tile --trace 1`):
         # 16384→1.18M, 65536→1.94M, 262144→2.43M, 524288→2.26M pages/s —
         # one Arrow batch per ~128k-row task partition minimizes the
         # per-batch JVM↔python round-trip overhead that capped scaling

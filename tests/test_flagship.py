@@ -40,6 +40,29 @@ def test_fused_matches_composable(spark):
     assert lean.count() == len(fused)
 
 
+def test_pandas_form_matches_jvm_form(spark):
+    """geocode_pip_tile (python regex extraction, the form
+    __spark_entry__ and the CLI run) and geocode_pip_tile_jvm (JVM extraction,
+    the form the benchmarks time) emit the same (page_id, poly_id,
+    cell_id) set, with and without the url column."""
+    from geospark.io.pages import generate_districts, generate_pages
+    from geospark.ops.flagship import geocode_pip_tile, geocode_pip_tile_jvm
+
+    pages = generate_pages(spark, 20000)
+    districts = generate_districts(spark, 200)
+    cols = ["page_id", "poly_id", "cell_id"]
+    for include_url in (True, False):
+        a = geocode_pip_tile(pages, districts, tile_level=14, include_url=include_url).toPandas()
+        b = geocode_pip_tile_jvm(pages, districts, tile_level=14, include_url=include_url).toPandas()
+        sa = sorted(map(tuple, a[cols].values.tolist()))
+        sb = sorted(map(tuple, b[cols].values.tolist()))
+        assert len(sa) > 0 and sa == sb
+        if include_url:
+            assert sorted(map(tuple, a[["page_id", "url"]].values.tolist())) == sorted(
+                map(tuple, b[["page_id", "url"]].values.tolist())
+            )
+
+
 def test_geocode_pip_tile_sql_matches_kernel(spark):
     """The fully-JVM Catalyst plan (broadcast candidate join + HOF
     ray-crossing PIP) emits the identical row set to the mapInPandas

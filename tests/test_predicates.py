@@ -137,3 +137,126 @@ def test_prepared_polygon_large_bucketed():
     ys = np.array([0.0, 0.0, 0.0])
     loc = pp.locate_batch(xs, ys)
     assert loc[0] == P.INTERIOR and loc[2] == P.EXTERIOR
+
+
+# ---------------------------------------------------------------------------
+# locate_pairs: many (polygon, point) pairs in one pass == locate_batch
+# ---------------------------------------------------------------------------
+
+def _ring(n, r, cx=0.0, cy=0.0, seed=0):
+    """Closed star-shaped ring with n vertices on a 0.5-unit lattice
+    (lattice points make exact on-edge / on-vertex hits likely)."""
+    rs = np.random.RandomState(seed)
+    a = np.sort(rs.uniform(0, 2 * np.pi, n))
+    rr = r * rs.uniform(0.4, 1.0, n)
+    ring = np.round(np.column_stack([cx + np.cos(a) * rr, cy + np.sin(a) * rr]) * 2) / 2
+    return np.vstack([ring, ring[:1]])
+
+
+PAIR_POLYS = [
+    SQ1,
+    # hole
+    "POLYGON ((0 0, 10 0, 10 10, 0 10, 0 0), (2 2, 8 2, 8 8, 2 8, 2 2))",
+    # multipolygon, one part with a hole, parts separated in y
+    "MULTIPOLYGON (((0 0, 4 0, 4 4, 0 4, 0 0)), ((1 6, 9 6, 9 10, 1 10, 1 6), "
+    "(3 7, 5 7, 5 9, 3 9, 3 7)))",
+    # concave with horizontal edges and a vertex on the ray
+    "POLYGON ((0 0, 10 0, 10 10, 5 5, 0 10, 0 0))",
+    # zero-height (every vertex on y = 3) and empty
+    "POLYGON ((0 3, 10 3, 5 3, 0 3))",
+    "POLYGON EMPTY",
+]
+
+
+def _pair_polys():
+    geoms = [g(w) for w in PAIR_POLYS]
+    # >= 256 edges: PreparedPolygon's y-bucket path; then a 1000-edge
+    # polygon with a hole
+    geoms.append(C.Geometry(C.POLYGON, [_ring(300, 10, 5, 5, seed=1)]))
+    geoms.append(
+        C.Geometry(C.POLYGON, [_ring(1000, 10, 5, 5, seed=2), _ring(40, 2, 5, 5, seed=3)[::-1]])
+    )
+    return geoms
+
+
+def _probe_points(pp, rs, n_random):
+    """Vertices, edge midpoints, bbox corners and edge points, points
+    outside the bbox, and lattice points across the bbox."""
+    if len(pp.x1):
+        xmin, ymin, xmax, ymax = pp.bbox
+        xs = [pp.x1, (pp.x1 + pp.x2) / 2, [xmin, xmin, xmax, xmax, xmin, xmax]]
+        ys = [pp.y1, (pp.y1 + pp.y2) / 2, [ymin, ymax, ymin, ymax, (ymin + ymax) / 2, ymax]]
+        xs.append([xmin - 1, xmax + 1, (xmin + xmax) / 2, (xmin + xmax) / 2])
+        ys.append([(ymin + ymax) / 2, ymin, ymin - 1e-9, ymax + 1])
+    else:
+        xmin, ymin, xmax, ymax = 0.0, 0.0, 10.0, 10.0
+        xs, ys = [], []
+    xs.append(np.round(rs.uniform(xmin - 2, xmax + 2, n_random) * 2) / 2)
+    ys.append(np.round(rs.uniform(ymin - 2, ymax + 2, n_random) * 2) / 2)
+    return np.concatenate([np.asarray(v, float) for v in xs]), np.concatenate(
+        [np.asarray(v, float) for v in ys]
+    )
+
+
+def _pair_parity(n_random, chunk=None, monkeypatch=None):
+    geoms = _pair_polys()
+    table = P.edge_table(geoms)
+    rs = np.random.RandomState(7)
+    poly, px, py, want = [], [], [], []
+    for i, geom in enumerate(geoms):
+        pp = P.PreparedPolygon(geom)
+        x, y = _probe_points(pp, rs, n_random)
+        poly.append(np.full(len(x), i))
+        px.append(x)
+        py.append(y)
+        # slices of 128 points take the y-bucket path on >= 256-edge
+        # polygons; the whole batch takes the all-edges path
+        sliced = np.concatenate(
+            [pp.locate_batch(x[s : s + 128], y[s : s + 128]) for s in range(0, len(x), 128)]
+        )
+        assert list(sliced) == list(pp.locate_batch(x, y))
+        want.append(sliced)
+    poly, px, py, want = map(np.concatenate, (poly, px, py, want))
+    # interleave the polygons: one call over every pair, in any order
+    order = rs.permutation(len(poly))
+    if chunk is not None:
+        monkeypatch.setattr(P, "PAIR_CHUNK", chunk)
+    got = P.locate_pairs(table, poly[order], px[order], py[order])
+    assert got.dtype == np.int8
+    assert list(got) == list(want[order])
+    return want
+
+
+def test_locate_pairs_matches_locate_batch():
+    want = _pair_parity(n_random=400)
+    # every code is exercised, boundary hits included
+    assert set(np.unique(want)) == {P.EXTERIOR, P.BOUNDARY, P.INTERIOR}
+
+
+def test_locate_pairs_chunk_seams(monkeypatch):
+    # more pair-edges than one default chunk, then chunks so small that
+    # a seam falls next to almost every pair
+    geoms = _pair_polys()
+    table = P.edge_table(geoms)
+    rs = np.random.RandomState(3)
+    x = rs.uniform(-6, 16, 30_000)
+    y = rs.uniform(-6, 16, 30_000)
+    big = len(geoms) - 1
+    poly = np.full(len(x), big)
+    want = P.PreparedPolygon(geoms[big]).locate_batch(x, y)
+    bx = table["bbox"][big]
+    inside = (x >= bx[0]) & (x <= bx[2]) & (y >= bx[1]) & (y <= bx[3])
+    band = table["band_off"][big] + P._band_of(y[inside], bx[1], table["h"][big], table["nb"][big])
+    bs = table["band_start"]
+    assert int((bs[band + 1] - bs[band]).sum()) > 2 * P.PAIR_CHUNK
+    assert list(P.locate_pairs(table, poly, x, y)) == list(want)
+    _pair_parity(n_random=50, chunk=7, monkeypatch=monkeypatch)
+    _pair_parity(n_random=50, chunk=1, monkeypatch=monkeypatch)
+
+
+def test_locate_pairs_empty_inputs():
+    table = P.edge_table([g(SQ1)])
+    none = np.empty(0)
+    assert len(P.locate_pairs(table, none.astype(np.int64), none, none)) == 0
+    empty = P.edge_table([])
+    assert len(empty["band_start"]) == 1 and len(empty["x1"]) == 0

@@ -217,6 +217,41 @@ def test_knn_points_bruteforce(spark):
         assert g == exp, f"qid {qid}"
 
 
+def test_knn_range_equal_to_cell_size(spark):
+    """rng == cell_size(level) is the edge of the fast 3x3 query cover:
+    x +- rng rounds independently at each end, so a query can touch 4
+    cells per axis.  Here the query's x - rng lands a hair below a cell
+    edge while x + rng rounds up onto the edge 3 cells on, and the
+    build point in that 4th cell is exactly rng away.  knn_join must
+    equal brute force."""
+    from geospark.cells.cellid import DEFAULT_GRID
+    from geospark.ops.knn import knn_join
+
+    level = 8
+    radius = DEFAULT_GRID.cell_size(level)
+    assert DEFAULT_GRID.level_for_size(radius) == level
+    qx, qy = 16383.999999999927, 1000.0
+    n = 1 << level
+    ix = lambda v: np.floor((v - DEFAULT_GRID.x0) / DEFAULT_GRID.span * n)
+    assert ix(qx + radius) - ix(qx - radius) == 3
+    rng = np.random.RandomState(5)
+    bxs = np.r_[32767.999999999927, rng.uniform(qx - 2 * radius, qx + 2 * radius, 200)]
+    bys = np.r_[qy, rng.uniform(qy - 2 * radius, qy + 2 * radius, 200)]
+    build = pd.DataFrame({"bid": np.arange(len(bxs)), "x": bxs, "y": bys})
+    query = pd.DataFrame({"qid": [0], "x": [qx], "y": [qy]})
+    got = (
+        knn_join(spark.createDataFrame(query), spark.createDataFrame(build), n=500, rng=radius)
+        .orderBy("rank")
+        .toPandas()
+    )
+    gx, gy = np.abs(bxs - qx), np.abs(bys - qy)
+    d = np.sqrt(gx * gx + gy * gy)
+    mask = d <= radius
+    assert mask[0]
+    order = np.lexsort((build["bid"][mask], d[mask]))
+    assert list(got["bid"]) == list(build["bid"][mask].to_numpy()[order])
+
+
 def test_tiling_and_raster(spark):
     from geospark.ops.tiling import assign_tiles, make_grid_df, rasterize, vectorize
     from geospark.cells.cellid import DEFAULT_GRID, unpack
