@@ -52,13 +52,13 @@ def entry(spark: SparkSession) -> DataFrame:
     """Flagship query on /root/testdata/sf0.001; driver checks rows>0."""
     _ensure_workers(spark)
     from geospark.io.pages import generate_districts, generate_pages
-    from geospark.ops.flagship import geocode_pip_tile
+    from geospark.ops.flagship import geocode_pip_tile_jvm
 
     sf_dir = "/root/testdata/sf0.001"
     n_docs = spark.read.parquet(f"{sf_dir}/documents.parquet").count()
     pages = generate_pages(spark, n_docs * 40)
     districts = generate_districts(spark, 100)
-    out = geocode_pip_tile(pages, districts, tile_level=14)
+    out = geocode_pip_tile_jvm(pages, districts, tile_level=14)
     return out.select("url", "poly_id", "cell_id")
 
 

@@ -46,7 +46,7 @@ def main(argv=None):
     # absolute imports: spark-submit runs this file as a plain script
     # (no parent package); the --py-files zip provides `geospark`
     from geospark.io.pages import generate_districts, generate_pages
-    from geospark.ops.flagship import geocode_pip_tile
+    from geospark.ops.flagship import geocode_pip_tile_jvm
     from geospark.run.pipeline import Pipeline, catalog_for
 
     spark = SparkSession.builder.appName(f"geospark-{args.mode}").getOrCreate()
@@ -118,7 +118,7 @@ def main(argv=None):
         return generate_districts(s, args.districts_n)
 
     def stage_join(s, outputs):
-        return geocode_pip_tile(
+        return geocode_pip_tile_jvm(
             outputs["pages"], outputs["districts"], tile_level=args.tile_level
         )
 

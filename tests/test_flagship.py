@@ -1,14 +1,13 @@
-"""Fused flagship operator == composable path, and salting parity."""
-
-import pytest
-from pyspark.sql import functions as F
+"""Fused flagship operator == composable path."""
 
 
 def test_fused_matches_composable(spark):
+    """The flagship equals geocode_pages + pip_join on (page_id,
+    poly_id, cell_id) and carries each page's own url."""
     from geospark.cells.cellid import DEFAULT_GRID
     from geospark.extract.geocode import geocode_pages
     from geospark.io.pages import generate_districts, generate_pages
-    from geospark.ops.flagship import geocode_pip_tile
+    from geospark.ops.flagship import geocode_pip_tile_jvm
     from geospark.ops.joins import choose_level, pip_join
 
     pages = generate_pages(spark, 20_000).cache()
@@ -17,112 +16,87 @@ def test_fused_matches_composable(spark):
     districts.count()
     level = choose_level(districts, "geom", DEFAULT_GRID)
 
-    fused = geocode_pip_tile(
+    fused = geocode_pip_tile_jvm(
         pages, districts, level=level, tile_level=14
     ).toPandas()
+    assert list(fused.columns) == ["page_id", "url", "poly_id", "cell_id"]
 
     geo = geocode_pages(pages, cell_level=level).where("kind=1").select(
-        "page_id", "x", "y", "cell"
+        "page_id", "url", "x", "y", "cell"
     )
     comp = pip_join(
         geo, districts, point_id="page_id", x_col="x", y_col="y",
         broadcast=True, level=level, cell_col="cell", tile_level=14,
+        keep_cols=["url"],
     ).toPandas()
 
     a = set(map(tuple, fused[["page_id", "poly_id", "cell_id"]].values.tolist()))
     b = set(map(tuple, comp[["point_id", "poly_id", "cell_id"]].values.tolist()))
     assert a == b and len(a) > 0
+    ua = sorted(map(tuple, fused[["page_id", "url"]].values.tolist()))
+    ub = sorted(map(tuple, comp[["point_id", "url"]].values.tolist()))
+    assert ua == ub
 
-    lean = geocode_pip_tile(
+    lean = geocode_pip_tile_jvm(
         pages, districts, level=level, tile_level=14, include_url=False
     )
     assert lean.columns == ["page_id", "poly_id", "cell_id"]
     assert lean.count() == len(fused)
 
 
-def test_pandas_form_matches_jvm_form(spark):
-    """geocode_pip_tile (python regex extraction, the form
-    __spark_entry__ and the CLI run) and geocode_pip_tile_jvm (JVM extraction,
-    the form the benchmarks time) emit the same (page_id, poly_id,
-    cell_id) set, with and without the url column."""
-    from geospark.io.pages import generate_districts, generate_pages
-    from geospark.ops.flagship import geocode_pip_tile, geocode_pip_tile_jvm
+def test_broken_geo_tokens_same_under_size_gate(spark):
+    """Pages whose 'geo:' token does not parse are dropped, and a page
+    with a broken token before a valid one keeps the valid one — on
+    the broadcast kernel and on the size-gated shuffle fallback
+    alike."""
+    import pandas as pd
 
-    pages = generate_pages(spark, 20000)
-    districts = generate_districts(spark, 200)
-    cols = ["page_id", "poly_id", "cell_id"]
-    for include_url in (True, False):
-        a = geocode_pip_tile(pages, districts, tile_level=14, include_url=include_url).toPandas()
-        b = geocode_pip_tile_jvm(pages, districts, tile_level=14, include_url=include_url).toPandas()
-        sa = sorted(map(tuple, a[cols].values.tolist()))
-        sb = sorted(map(tuple, b[cols].values.tolist()))
-        assert len(sa) > 0 and sa == sb
-        if include_url:
-            assert sorted(map(tuple, a[["page_id", "url"]].values.tolist())) == sorted(
-                map(tuple, b[["page_id", "url"]].values.tolist())
+    import geospark.ops.joins as J
+    from geospark.geom import core as C
+    from geospark.ops.flagship import geocode_pip_tile_jvm
+
+    htmls = {
+        0: "<p>geo:abc</p>",
+        1: "<p>geo:12.50,</p>",
+        2: "<p>geo:x near <b>geo:1.00,2.00</b></p>",
+        3: "<p>geo:3.00,4.00</p>",
+        4: "<p>no token</p>",
+        5: "<p>geo:80.00,80.00</p>",
+    }
+    pages = spark.createDataFrame(
+        [(i, f"https://p{i}.example.org/", bytearray(h.encode())) for i, h in htmls.items()],
+        "page_id long, url string, html binary",
+    )
+
+    def polys():
+        # a fresh DataFrame per run: a cached broadcast index for the
+        # same object would bypass the size gate
+        return spark.createDataFrame(
+            pd.DataFrame(
+                {
+                    "poly_id": [0],
+                    "geom": [C.to_wkb(C.from_wkt("POLYGON ((0 0, 50 0, 50 50, 0 50, 0 0))"))],
+                }
             )
+        )
 
-
-def test_geocode_pip_tile_sql_matches_kernel(spark):
-    """The fully-JVM Catalyst plan (broadcast candidate join + HOF
-    ray-crossing PIP) emits the identical row set to the mapInPandas
-    kernel plan."""
-    from geospark.io.pages import generate_districts, generate_pages
-    from geospark.ops.flagship import geocode_pip_tile_jvm, geocode_pip_tile_sql
-
-    pages = generate_pages(spark, 20000)
-    districts = generate_districts(spark, 200)
-    a = geocode_pip_tile_jvm(pages, districts, tile_level=14).toPandas()
-    b = geocode_pip_tile_sql(pages, districts, tile_level=14).toPandas()
-    cols = ["page_id", "poly_id", "cell_id"]
-    sa = sorted(map(tuple, a[cols].values.tolist()))
-    sb = sorted(map(tuple, b[cols].values.tolist()))
-    assert len(sa) > 0 and sa == sb
-
-
-def test_geocode_pip_tile_hybrid_matches_kernel(spark):
-    """The inner-box hybrid plan (JVM fast path + python ring refine)
-    emits the identical row set to the mapInPandas kernel plan."""
-    from geospark.io.pages import generate_districts, generate_pages
-    from geospark.ops.flagship import geocode_pip_tile_hybrid, geocode_pip_tile_jvm
-
-    pages = generate_pages(spark, 20000)
-    districts = generate_districts(spark, 200)
-    a = geocode_pip_tile_jvm(pages, districts, tile_level=14).toPandas()
-    b = geocode_pip_tile_hybrid(pages, districts, tile_level=14).toPandas()
-    cols = ["page_id", "poly_id", "cell_id"]
-    sa = sorted(map(tuple, a[cols].values.tolist()))
-    sb = sorted(map(tuple, b[cols].values.tolist()))
-    assert len(sa) > 0 and sa == sb
-
-
-def test_inner_box_is_interior(spark):
-    """_inner_box returns a box whose corners and midpoints are
-    strictly interior for every district shape."""
-    import numpy as np
-
-    from geospark.geom import core as gc
-    from geospark.geom import predicates as gpred
-    from geospark.io.pages import generate_districts
-    from geospark.ops.flagship import _inner_box
-
-    rows = generate_districts(spark, 60).select("poly_id", "geom").collect()
-    n_nonempty = 0
-    for r in rows:
-        pp = gpred.PreparedPolygon(gc.from_wkb(bytes(r[1])))
-        x0, y0, x1, y1 = _inner_box(pp)
-        if x0 > x1:
-            continue
-        n_nonempty += 1
-        cx, cy = (x0 + x1) / 2, (y0 + y1) / 2
-        px = np.array([x0, x1, x1, x0, cx, x0, x1, cx, cx]) 
-        py = np.array([y0, y0, y1, y1, cy, cy, cy, y0, y1])
-        # strictly interior points only (open box): nudge corners in
-        eps = 1e-9 * max(x1 - x0, y1 - y0)
-        px = np.clip(px, x0 + eps, x1 - eps)
-        py = np.clip(py, y0 + eps, y1 - eps)
-        assert (pp.locate_batch(px, py) == gpred.INTERIOR).all()
-    assert n_nonempty >= 40  # most district shapes admit an inner box
+    fused_df = geocode_pip_tile_jvm(pages, polys(), tile_level=14)
+    assert "MapInArrow" in fused_df._jdf.queryExecution().executedPlan().toString()
+    fused = fused_df.toPandas()
+    saved = J.BROADCAST_MAX_BYTES
+    try:
+        J.BROADCAST_MAX_BYTES = 1
+        gated_df = geocode_pip_tile_jvm(pages, polys(), tile_level=14)
+        assert "MapInArrow" not in gated_df._jdf.queryExecution().executedPlan().toString()
+        gated = gated_df.toPandas()
+    finally:
+        J.BROADCAST_MAX_BYTES = saved
+    key = lambda d: set(zip(d["page_id"], d["poly_id"], d["cell_id"]))
+    assert key(fused) == key(gated)
+    assert set(fused["page_id"]) == {2, 3}
+    assert set(zip(gated["page_id"], gated["url"])) == {
+        (2, "https://p2.example.org/"), (3, "https://p3.example.org/")
+    }
 
 
 def test_result_outlives_dimension_dataframe(spark):

@@ -31,10 +31,31 @@ def test_flagship_plan_has_no_shuffle(spark):
     out = geocode_pip_tile_jvm(pages, districts, tile_level=14)
     p = plan_of(out)
     assert "Exchange" not in p, p
-    assert "MapInPandas" in p
-    # exactly ONE python stage (fused geocode+cells+PIP+tile refine);
-    # the pages generator itself is a second MapInPandas upstream
-    assert p.count("MapInPandas") <= 2
+    # exactly ONE python stage of the flagship (fused cells+PIP+tile);
+    # the pages generator upstream is the one MapInPandas
+    assert p.count("MapInArrow") == 1, p
+    assert p.count("MapInPandas") == 1, p
+
+
+def test_entry_runs_the_flagship_kernel(spark, sf_dir_001):
+    """__spark_entry__.entry runs the same shuffle-free, one-kernel
+    plan as geocode_pip_tile_jvm, with the same rows."""
+    import __spark_entry__
+    from geospark.io.pages import generate_districts, generate_pages
+    from geospark.ops.flagship import geocode_pip_tile_jvm
+
+    out = __spark_entry__.entry(spark)
+    p = plan_of(out)
+    assert "Exchange" not in p, p
+    assert p.count("MapInArrow") == 1, p
+    assert p.count("MapInPandas") == 1, p  # the pages generator
+
+    n_docs = spark.read.parquet(f"{sf_dir_001}/documents.parquet").count()
+    ref = geocode_pip_tile_jvm(
+        generate_pages(spark, n_docs * 40), generate_districts(spark, 100), tile_level=14
+    ).select("url", "poly_id", "cell_id")
+    rows = sorted(map(tuple, out.collect()))
+    assert len(rows) > 0 and rows == sorted(map(tuple, ref.collect()))
 
 
 def test_parquet_scan_pushdown_and_pruning(spark, sf_dir_001):
